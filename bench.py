@@ -267,14 +267,13 @@ def main() -> None:
     staging_warm = time.perf_counter()
     staging_components: dict = {}
     try:
-        # The staging schedule (builders, dependency phases, pool width
-        # and its rationale) lives in torchfusion_spark/staging.py — ONE
-        # copy shared with tools/perf_probe.py (code-review r16: the two
-        # hand-duplicated lists drifted).
+        # The staging schedule (components, their deps, pool width and
+        # its rationale) lives in torchfusion_spark/staging.py — ONE copy
+        # shared with tools/perf_probe.py, so the two cannot drift.
         from torchfusion_spark.staging import prewarm_staging
 
-        # Per-relation itemization (VERDICT r15 item 4): each component's
-        # number is its own wall-clock UNDER the concurrent schedule
+        # Per-relation itemization: each component's number is its own
+        # wall-clock UNDER the concurrent schedule
         # (threads share the local[32] scheduler, so components overlap
         # and the sum exceeds staging_warm_sec — the per-row figure says
         # which relations dominate the bill, the total says what a cold
@@ -289,7 +288,7 @@ def main() -> None:
         # fatal, but never SILENT either: an aborted prewarm shifts the
         # unstaged relations' build cost into the first timed queries,
         # which corrupts the warm/cold attribution the bench publishes —
-        # the payload must say so (code-review r07 finding)
+        # the payload must say so
         staging_error = f"{type(exc).__name__}: {exc}"
     else:
         staging_error = None

@@ -1870,13 +1870,14 @@ def test_differential_pack_sequences_prefix_sum(spark, duck, restore_documents, 
     duck.execute("CREATE OR REPLACE VIEW documents AS SELECT * FROM pdf")
     # the registry path: staged (lang, shard)-partitioned input relation
     # (the r15 single-scan plan), keyed on the swapped docs view per case
-    from torchfusion_spark.operators.textstats import _staged_pack_t
+    from torchfusion_spark.session import staged
 
     got = [
         tuple(r)
-        for r in _staged_pack_t(
+        for r in staged(
             spark,
-            then=lambda t_rel: spark.sql(
+            "pack_t",
+            lambda t_rel: spark.sql(
                 pack_sequences_sql("spark", seq_len, shards, t_rel=t_rel)
             ),
             shards=shards,

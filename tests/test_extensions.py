@@ -795,14 +795,15 @@ def test_url_incremental_index_survives_corpus_swap_back(spark, tables):
     the plan resolved before the swap still collects afterwards."""
     import os
 
-    from torchfusion_spark.operators.dedup import _docs_key, _url_index_path
+    from torchfusion_spark.operators.dedup import _url_index_path
+    from torchfusion_spark.session import view_key
     from torchfusion_spark.plans import REGISTRY
 
     builder = REGISTRY["dedup_url_incremental"].builder
     orig = spark.table("documents")
     try:
         df_a = builder(spark, tables)  # resolves A's plan; builds A's index
-        path_a = _url_index_path(_docs_key(spark))
+        path_a = _url_index_path(view_key(spark, "documents"))
         assert os.path.exists(os.path.join(path_a, "_TF_BUILT"))
         files_a = {
             f: os.path.getmtime(os.path.join(path_a, "urls", f))
@@ -1445,9 +1446,9 @@ def test_bm25_topk_matches_python(spark, tables):
     from torchfusion_spark.operators.textstats import (
         BM25_QUERIES,
         BM25_TOP_K,
-        _staged_unigrams,
         bm25_topk_sql,
     )
+    from torchfusion_spark.session import staged
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -1488,7 +1489,7 @@ def test_bm25_topk_matches_python(spark, tables):
         want[q] = [(d, float(s), m) for d, (s, m) in ranked[:BM25_TOP_K]]
 
     got = spark.sql(
-        bm25_topk_sql("spark", tf_rel=_staged_unigrams(spark))
+        bm25_topk_sql("spark", tf_rel=staged(spark, "unigrams"))
     ).collect()
     by_q: dict[int, list] = {}
     for r in got:
@@ -1540,7 +1541,8 @@ def test_lm_perplexity_matches_python(spark, tables):
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    from torchfusion_spark.operators.textstats import _staged_unigrams, lm_perplexity_sql
+    from torchfusion_spark.operators.textstats import lm_perplexity_sql
+    from torchfusion_spark.session import staged
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -1581,7 +1583,7 @@ def test_lm_perplexity_matches_python(spark, tables):
             buckets[d] = ["head", "middle", "tail"][b - 1]
 
     got = spark.sql(
-        lm_perplexity_sql("spark", tf_rel=_staged_unigrams(spark))
+        lm_perplexity_sql("spark", tf_rel=staged(spark, "unigrams"))
     ).collect()
     assert len(got) == len(per_doc)
     for r in got:
@@ -1605,9 +1607,9 @@ def test_dsir_importance_matches_python(spark, tables):
 
     from torchfusion_spark.operators.textstats import (
         DSIR_BUCKETS,
-        _staged_unigrams,
         dsir_importance_sql,
     )
+    from torchfusion_spark.session import staged
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -1655,7 +1657,7 @@ def test_dsir_importance_matches_python(spark, tables):
     quintile = {d: _cut_bucket(scored[d][1], cuts, desc=True) for d in scored}
 
     got = spark.sql(
-        dsir_importance_sql("spark", tf_rel=_staged_unigrams(spark))
+        dsir_importance_sql("spark", tf_rel=staged(spark, "unigrams"))
     ).collect()
     assert len(got) == len(scored)
     for r in got:
@@ -1680,7 +1682,8 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
     pattern, which does NOT bump spark._tf_tables_loaded — memo-hit on
     the tables key and served corpus A's cached grams to corpus B's
     anti-join, silently mixing corpora in the span operators."""
-    from torchfusion_spark.operators import dedup, similarity, textstats
+    from torchfusion_spark.operators import dedup
+    from torchfusion_spark.session import staged
 
     def corpus(dup_ids, filler):
         run = " ".join(f"d{i}" for i in range(10))  # shared 10-token run
@@ -1699,7 +1702,7 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
             ).createOrReplaceTempView("documents")
             spans = spark.sql(
                 dedup.substring_body_sql(
-                    "spark", dedup._staged_substring_grams(spark), dedup.SUBSTRING_K
+                    "spark", staged(spark, "substring_grams"), dedup.SUBSTRING_K
                 )
             ).collect()
             assert {r.doc_id for r in spans} == set(dup_ids), (dup_ids, spans)
@@ -1709,7 +1712,7 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
             assert {r.doc_id for r in stripped if r.removed_tokens > 0} <= set(dup_ids)
             # unigram memo (BM25/LM/DSIR side): tokens must come from the
             # live corpus — filler tokens are disjoint between corpora
-            uni = spark.table(textstats._staged_unigrams(spark))
+            uni = spark.table(staged(spark, "unigrams"))
             toks = {r.tok for r in uni.select("tok").distinct().collect()}
             assert any(t.startswith(filler) for t in toks), filler
             other = "b" if filler == "a" else "a"
@@ -1721,7 +1724,7 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
                 [(i, [float(i + 1), 1.0]) for i in range(n_vec)],
                 "vec_id bigint, embedding array<double>",
             ).createOrReplaceTempView("embeddings")
-            norms = spark.table(similarity._staged_norms(spark))
+            norms = spark.table(staged(spark, "sim_norms"))
             assert norms.count() == n_vec
     finally:
         orig_docs.createOrReplaceTempView("documents")
@@ -2182,12 +2185,13 @@ def test_quantile_cut_approx_production_path(spark, tables):
     and a populated bucket distribution. The oracle gate always runs
     exact; this pins that the swap is a real code path, not a docstring."""
     from torchfusion_spark.operators import textstats
+    from torchfusion_spark.session import staged
 
     try:
         textstats.QUANTILE_EXACT = False
         df = spark.sql(
             textstats.dsir_importance_sql(
-                "spark", tf_rel=textstats._staged_unigrams(spark)
+                "spark", tf_rel=staged(spark, "unigrams")
             )
         )
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -2221,10 +2225,10 @@ def test_quality_classifier_matches_python_recompute(spark, tables):
     from torchfusion_spark.operators.textstats import (
         CLS_TRAIN_PCT,
         DSIR_BUCKETS,
-        _staged_unigrams,
         gopher_rules_sql,
         quality_classifier_sql,
     )
+    from torchfusion_spark.session import staged
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -2286,7 +2290,7 @@ def test_quality_classifier_matches_python_recompute(spark, tables):
     quintile = {d: _cut_bucket(scored[d][1], cuts, desc=True) for d in scored}
 
     got = spark.sql(
-        quality_classifier_sql("spark", tf_rel=_staged_unigrams(spark))
+        quality_classifier_sql("spark", tf_rel=staged(spark, "unigrams"))
     ).collect()
     assert len(got) == len(scored)
     for r in got:
@@ -2316,15 +2320,15 @@ def test_quality_ensemble_composes_its_signals(spark, tables):
     bucket): signals, agreement count, tier and majority keep recomputed
     per doc from the sub-operators' own Spark outputs."""
     from torchfusion_spark.operators.textstats import (
-        _staged_labels,
-        _staged_unigrams,
         lm_perplexity_sql,
         quality_classifier_sql,
         quality_ensemble_sql,
     )
 
-    tfn = _staged_unigrams(spark)
-    labn = _staged_labels(spark)
+    from torchfusion_spark.session import staged
+
+    tfn = staged(spark, "unigrams")
+    labn = staged(spark, "cls_labels")
     cls = {
         r.doc_id: r
         for r in spark.sql(
@@ -2725,16 +2729,16 @@ def test_legacy_marker_upgraded_on_probe(spark, tables):
     import os
 
     from torchfusion_spark.operators.dedup import (
-        _docs_key,
         _marker_recorded_start,
         _pid_start_time,
         _url_index_path,
     )
+    from torchfusion_spark.session import view_key
     from torchfusion_spark.plans import REGISTRY
 
     builder = REGISTRY["dedup_url_incremental"].builder
     builder(spark, tables).count()
-    path = _url_index_path(_docs_key(spark))
+    path = _url_index_path(view_key(spark, "documents"))
     marker = os.path.join(path, "_TF_BUILT")
     with open(marker) as f:
         first_line = f.read().splitlines()[0]

@@ -118,6 +118,14 @@ def test_minhash_cap_preserves_normal_corpus_pairs(spark, tables):
     uncapped_body = minhash_body_sql("spark", "__minhash_sig", 0.6, max_bucket=10**9)
     pairs_uncapped = spark.sql(uncapped_body).toPandas()
     pd.testing.assert_frame_equal(pairs_capped, pairs_uncapped)
+    # the staged band relation carries the family cap: pairing it with
+    # another cap must fail loudly, not silently apply the staged one
+    from torchfusion_spark.operators.dedup import simhash_body_sql
+
+    with pytest.raises(ValueError, match="ok_rel"):
+        minhash_body_sql("spark", "__minhash_sig", 0.6, max_bucket=10**9, ok_rel="__minhash_ok")
+    with pytest.raises(ValueError, match="ok_rel"):
+        simhash_body_sql("spark", "__simhash_sig", max_bucket=64, ok_rel="__simhash_ok")
 
 
 def test_arrow_ipc_roundtrip(spark, tables, tmp_path):
@@ -305,7 +313,7 @@ def test_staged_lifecycle_no_storage_leak(spark, tables):
     (analyzed().rdd() on the checkpointed Dataset is the handle the block
     manager holds)."""
     from torchfusion_spark.operators import dedup, similarity
-    from torchfusion_spark.session import staged_checkpoint
+    from torchfusion_spark.session import staged, staged_checkpoint
 
     jsc = spark.sparkContext._jsc
 
@@ -317,15 +325,13 @@ def test_staged_lifecycle_no_storage_leak(spark, tables):
     assert jsc.getPersistentRDDs().size() == before + 1
 
     # operators: persistent-RDD count is stable across repeat invocations
-    from torchfusion_spark.operators import textstats
-
     dedup.containment(spark).count()
     similarity.kmeans(spark).count()
-    textstats._staged_bloom(spark)
+    staged(spark, "bloom")
     steady = jsc.getPersistentRDDs().size()
     dedup.containment(spark).count()
     similarity.kmeans(spark).count()
-    textstats._staged_bloom(spark)
+    staged(spark, "bloom")
     assert jsc.getPersistentRDDs().size() == steady
 
 
@@ -336,8 +342,9 @@ def test_staged_bloom_rebuilds_on_table_reload(spark, tables):
     the failure mode would be silently decontaminating against the wrong
     benchmark suite."""
     from torchfusion_spark.operators import textstats
+    from torchfusion_spark.session import staged
 
-    textstats._staged_bloom(spark)
+    staged(spark, "bloom")
     before = spark.table("__tf_bench_h").count()
 
     orig_docs = spark.table("documents")
@@ -346,7 +353,7 @@ def test_staged_bloom_rebuilds_on_table_reload(spark, tables):
         # a different corpus: keep only every 4th doc
         orig_docs.where("doc_id % 4 = 0").createOrReplaceTempView("documents")
         spark._tf_tables_loaded = (orig_key, "bloom-switch-probe")
-        textstats._staged_bloom(spark)
+        staged(spark, "bloom")
         after = spark.table("__tf_bench_h").count()
         assert after < before  # fewer bench docs -> fewer bench hashes
         # and the filter matches a from-scratch fold over the new set
@@ -358,7 +365,7 @@ def test_staged_bloom_rebuilds_on_table_reload(spark, tables):
     finally:
         orig_docs.createOrReplaceTempView("documents")
         spark._tf_tables_loaded = orig_key
-        textstats._staged_bloom(spark)  # restore the real staging
+        staged(spark, "bloom")  # restore the real staging
 
 
 def test_cap_recall_loss_exact_counts(spark, tables):
@@ -384,6 +391,7 @@ def test_cap_recall_loss_exact_counts(spark, tables):
         minhash_capped_bucket_stats,
         simhash_capped_bucket_stats,
     )
+    from torchfusion_spark.session import forget_staged
 
     n_boiler = MAX_BUCKET + 16  # 80: every all-boilerplate bucket is hot
     boiler = "license header boilerplate text repeated verbatim across the corpus shard"
@@ -405,7 +413,7 @@ def test_cap_recall_loss_exact_counts(spark, tables):
         # new memo key → minhash_lsh re-stages __minhash_sig over the
         # synthetic view instead of reusing the fixture corpus signature
         spark._tf_tables_loaded = ("__cap_recall_synthetic__",)
-        spark._tf_minhash_sig_key = object()
+        forget_staged(spark, "minhash_sig")
 
         mh = minhash_capped_bucket_stats(spark).toPandas()
         assert len(mh) == 8
@@ -431,7 +439,7 @@ def test_cap_recall_loss_exact_counts(spark, tables):
     finally:
         # restore the fixture corpus: reload tables and invalidate memos
         spark._tf_tables_loaded = None
-        spark._tf_minhash_sig_key = object()
+        forget_staged(spark, "minhash_sig")
         from torchfusion_spark.sources import load_tables
 
         load_tables(spark, tables)
@@ -518,17 +526,17 @@ def test_staged_ok_matches_inline_band_relation(spark, tables):
         SIMHASH_MAX_BUCKET,
         G,
         _simhash_band_keys,
-        _staged_simhash_sig,
         minhash_lsh,
     )
 
     from torchfusion_spark.operators import similarity as sim
+    from torchfusion_spark.session import staged
 
     minhash_lsh(spark)  # stages __minhash_sig + __minhash_ok
-    _staged_simhash_sig(spark)  # stages __simhash_sig + __simhash_ok
-    mm._staged_phash(spark)  # stages __mm_phash + __mm_phash_ok
-    mm._staged_frame_phash(spark)  # stages __mm_fphash + __mm_fphash_ok
-    sim._staged_buckets(spark, lambda rel: None)  # stages __sim_lsh_ok too
+    staged(spark, "simhash_sig")  # stages __simhash_sig + __simhash_ok
+    staged(spark, "phash")  # stages __mm_phash + __mm_phash_ok
+    staged(spark, "frame_phash")  # stages __mm_fphash + __mm_fphash_ok
+    staged(spark, "sim_buckets")  # stages __sim_lsh_ok too
 
     def inline_ok(sig_view, band_keys, carry, cap):
         band_rel = G.band_explode(sig_view, band_keys, "spark", carry=carry)

@@ -108,7 +108,7 @@ def main() -> None:
 
 def _prewarm(spark) -> None:
     """The bench's staged-relation prewarm — the shared schedule in
-    torchfusion_spark/staging.py (code-review r16: one copy, no drift)."""
+    torchfusion_spark/staging.py (one copy, no drift)."""
     from torchfusion_spark.staging import prewarm_staging
 
     t0 = time.perf_counter()

@@ -20,9 +20,9 @@ from __future__ import annotations
 
 import itertools
 import os
-import threading
 
 from torchfusion_spark.operators import sqlgen as G
+from torchfusion_spark.session import staged, view_key
 
 
 def exact_dedup_sql(d: str) -> str:
@@ -266,7 +266,10 @@ def minhash_body_sql(
     bucket-size window run once per corpus instead of twice per query
     (plan: 2 × [Exchange → Window] → 1 staged build; see
     plans/r17/dedup_minhash_lsh_*). The oracle keeps the inline CTE
-    chain — DuckDB's MATERIALIZED CTEs evaluate once already."""
+    chain — DuckDB's MATERIALIZED CTEs evaluate once already. The
+    staged relation is capped at ``MAX_BUCKET``, so pairing it with any
+    other cap raises instead of silently applying the staged one."""
+    _check_ok_cap(ok_rel, max_bucket, MAX_BUCKET)
     inter = G.arr_intersect_size("x.hx", "y.hx", d)
     mat = "MATERIALIZED " if d == "duck" else ""
     if ok_rel is None:
@@ -298,6 +301,14 @@ def minhash_body_sql(
     WHERE jaccard >= {threshold}
     {"ORDER BY id_a, id_b" if ordered else ""}
     """
+
+
+def _check_ok_cap(ok_rel: str | None, max_bucket: int, family_cap: int) -> None:
+    if ok_rel is not None and max_bucket != family_cap:
+        raise ValueError(
+            f"ok_rel {ok_rel!r} is staged with cap {family_cap}; "
+            f"max_bucket={max_bucket} needs the inline band relation (ok_rel=None)"
+        )
 
 
 def minhash_lsh_sql(d: str, threshold: float = 0.6) -> str:
@@ -338,134 +349,39 @@ def minhash_lsh(spark, threshold: float = 0.6, ordered: bool = True):
     after ``minhash_lsh`` in gate order, and recomputing the one expensive
     pass (shingle + md5 + fold) would double its cost for nothing. The key
     follows the docs-view identity, so switching sf_dir OR swapping the
-    view directly rebuilds."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = _docs_key(spark)
-    with memo_lock(spark, "minhash_sig"):
-        if getattr(spark, "_tf_minhash_sig_key", object()) != key:
-            # derive from the SESSION-STAGED hashed-shingle relation shared
-            # with containment/decontaminate — the shingle+md5 pass is the
-            # dominant cost of every shingle-based operator and previously ran
-            # a second time here over a private docs view
-            # (r16 note: a NumPy-under-mapInArrow spelling of the signature
-            # fold was measured SLOWER than this SQL fold — warm noop-sink
-            # 0.59s vs 0.21s at sf0.1, plus ~10s cold Python-worker spin-up —
-            # because the hx array column must round-trip the Arrow boundary
-            # for the Jaccard verify; the JVM fold stays)
-            sig = staged_cache(
-                spark,
-                "minhash_sig",
-                spark.sql(sig_rel_sql("spark", _staged_hx(spark))),
-            )
-            sig.count()  # materialize before the self-join races both sides into the fill
-            sig.createOrReplaceTempView("__minhash_sig")
-            # stage the capped banded relation beside the signature (r17):
-            # the candidate self-join reads it on BOTH sides, and the
-            # cached plan keeps its (band, bkey) hash partitioning, so the
-            # join needs no exchange at all — the explode + bucket-size
-            # window run once per corpus here (cost visible in the
-            # first-run/staging bill, same key/lock as the signature)
-            ok = staged_cache(
-                spark,
-                "minhash_ok",
-                spark.sql(minhash_ok_sql("spark", "__minhash_sig")),
-            )
-            ok.count()  # same fill-race rule as the signature
-            ok.createOrReplaceTempView("__minhash_ok")
-            spark._tf_minhash_sig_key = key
-        # resolve the returned plan INSIDE the memo lock: resolving after
-        # release would let a concurrent docs-view swap replace
-        # __minhash_sig between the memo check and spark.sql, binding the
-        # plan to the other corpus's signatures (ADVICE r08 TOCTOU)
-        return spark.sql(
-            minhash_body_sql(
-                "spark",
-                "__minhash_sig",
-                threshold,
-                ordered=ordered,
-                ok_rel="__minhash_ok",
-            )
-        )
+    view directly rebuilds. The plan resolves inside the memo lock (see
+    :func:`~torchfusion_spark.session.staged`)."""
+    return staged(
+        spark,
+        "minhash_sig",
+        lambda sig, ok: spark.sql(
+            minhash_body_sql("spark", sig, threshold, ordered=ordered, ok_rel=ok)
+        ),
+    )
 
 
-_DOCS_LOCK = threading.Lock()
+def minhash_sig_rels(spark):
+    """Staged ``__minhash_sig`` + ``__minhash_ok``. The signature derives
+    from the session-staged hashed-shingle relation shared with
+    containment/decontaminate: the shingle+md5 pass dominates every
+    shingle-based operator. (A NumPy-under-mapInArrow spelling of the
+    fold measured SLOWER than this SQL fold — warm noop-sink 0.59 s vs
+    0.21 s at sf0.1, plus ~10 s cold Python-worker spin-up — because the
+    hx array must round-trip the Arrow boundary for the Jaccard verify.)
+    The capped banded relation is staged beside it: the candidate
+    self-join reads it on BOTH sides, and the cached plan keeps its
+    (band, bkey) hash partitioning, so the join needs no exchange."""
+    yield spark.sql(sig_rel_sql("spark", "__tf_hx"))
+    yield spark.sql(minhash_ok_sql("spark", "__minhash_sig"))
 
 
-def _docs_key(spark):
-    """Identity of the live ``documents`` view for staged-memo keying:
-    (load_tables key, semantic plan hash of the view). EVERY memo derived
-    from the docs view keys on this, not the tables key alone — a caller
-    that swaps the view directly (the property-test pattern) invalidates
-    ``_staged_docs``, and a tables-key-only derived memo would keep
-    serving relations cached from the PREVIOUS corpus, silently mixing
-    corpora in downstream joins (code-review r07: the span operators'
-    anti-join would strip the new corpus with the old corpus's grams).
-    An un-analyzable view yields a fresh ``object()`` → always rebuild."""
-    try:
-        return (
-            getattr(spark, "_tf_tables_loaded", None),
-            spark.table("documents").semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 — unknown plan identity → always rebuild
-        return object()
-
-
-def _staged_docs(spark):
-    """Fan the documents table out to full parallelism once; a single
-    small parquet file arrives as ONE split and every dedup signature
-    pass is CPU-bound (at cluster scale the input already has enough
-    splits and this shuffle is a no-op-sized rebalance).
-
-    Memoized per (session, loaded tables, SEMANTIC PLAN of the live
-    ``documents`` view) and lock-guarded: the parallel bench prewarm
-    runs ``_staged_hx`` and ``_staged_substring_grams`` concurrently and
-    both prep the docs view — without the memo each pays the fan-out
-    count() job and both write the same ``__dedup_docs`` slot. The
-    semantic-hash component invalidates the memo when a caller swaps
-    the ``documents`` view DIRECTLY (the established pattern in the
-    property/differential tests) without bumping
-    ``spark._tf_tables_loaded`` — a tables-key-only memo would silently
-    serve the PREVIOUS corpus to every downstream consumer (code-review
-    r07)."""
-    from torchfusion_spark.session import cpu_fanout
-
-    key = _docs_key(spark)
-    with _DOCS_LOCK:
-        if getattr(spark, "_tf_dedup_docs_key", object()) != key:
-            cpu_fanout(spark.table("documents")).createOrReplaceTempView("__dedup_docs")
-            spark._tf_dedup_docs_key = key
-    return "__dedup_docs"
-
-
-def _staged_hx(spark, then=None) -> str:
-    """The hashed-shingle relation (doc_id, hx) staged ONCE per (session,
-    loaded tables): the shingle-build + md5 pass is the dominant cost of
-    every shingle-based operator (containment, both decontaminate
-    variants), and each of their plans references it on two or more CTE
-    sides — Catalyst inlines CTEs, so without staging the md5 pass runs
-    per reference. Memoized the same way as the MinHash signature memo
-    (keyed on the docs-view identity, so switching sf_dir or swapping
-    the view rebuilds).
-
-    ``then`` is invoked INSIDE the memo lock (the
-    ``similarity._staged_norms`` discipline): a consumer resolving its
-    plan from ``__tf_hx`` after release races a concurrent docs-view
-    swap (ADVICE r08 TOCTOU class, closed family-wide in r9)."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = _docs_key(spark)
-    with memo_lock(spark, "hx"):
-        if getattr(spark, "_tf_hx_key", object()) != key:
-            hx = staged_cache(
-                spark, "tf_hx", spark.sql(hashed_shingle_sql("spark", rel=_staged_docs(spark)))
-            )
-            hx.count()
-            hx.createOrReplaceTempView("__tf_hx")
-            spark._tf_hx_key = key
-        if then is not None:
-            return then("__tf_hx")
-    return "__tf_hx"
+def hx_rel(spark):
+    """The hashed-shingle relation (doc_id, hx), staged once per corpus:
+    the shingle-build + md5 pass is the dominant cost of every
+    shingle-based operator (containment, both decontaminate variants),
+    and each of their plans references it on two or more CTE sides —
+    Catalyst inlines CTEs, so unstaged the md5 pass runs per reference."""
+    return spark.sql(hashed_shingle_sql("spark", rel="__dedup_docs"))
 
 
 def _simhash_band_keys(bands: int, d: str) -> list[str]:
@@ -545,9 +461,10 @@ def simhash_body_sql(
     boilerplate that upstream exact dedup already removed). The oracle
     runs the identical capped SQL.
 
-    ``ok_rel`` (Spark arm only, r17): a MATERIALIZED capped banded
-    relation (:func:`simhash_ok_sql`) to self-join directly — same
-    staged-``ok`` discipline as :func:`minhash_body_sql`."""
+    ``ok_rel`` (Spark arm only): a MATERIALIZED capped banded relation
+    (:func:`simhash_ok_sql`) to self-join directly — same staged-``ok``
+    discipline, and the same cap check, as :func:`minhash_body_sql`."""
+    _check_ok_cap(ok_rel, max_bucket, SIMHASH_MAX_BUCKET)
     ham = f"bit_count({G.xor('sim_a', 'sim_b', d)})"
     if ok_rel is None:
         bands = bits // 8
@@ -589,64 +506,43 @@ def simhash_sql(d: str, bits: int = 32, max_hamming: int = 2) -> str:
     )
 
 
-def _staged_simhash_sig(spark, bits: int = 32) -> str:
-    """The SimHash signature relation staged once per (session, loaded
-    tables, bits) — memoized like the MinHash signature so the banded
-    join and the cap-stats observer share one per-token hash + bit-vote
-    pass instead of each re-running it."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = (_docs_key(spark), bits)
-    with memo_lock(spark, "simhash_sig"):
-        if getattr(spark, "_tf_simhash_sig_key", object()) != key:
-            s = staged_cache(
-                spark,
-                "simhash_sig",
-                spark.sql(simhash_sig_sql("spark", rel=_staged_docs(spark), bits=bits)),
-            )
-            s.count()
-            s.createOrReplaceTempView("__simhash_sig")
-            # capped banded relation staged beside the signature (r17,
-            # the __minhash_ok discipline): both pair-join sides read it
-            # exchange-free, explode + bucket-size window run once
-            ok = staged_cache(
-                spark,
-                "simhash_ok",
-                spark.sql(simhash_ok_sql("spark", "__simhash_sig", bits=bits)),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__simhash_ok")
-            spark._tf_simhash_sig_key = key
-    return "__simhash_sig"
+def simhash_sig_rels(spark, bits: int = 32):
+    """Staged ``__simhash_sig`` + ``__simhash_ok``: the banded join and
+    the cap-stats observer share one per-token hash + bit-vote pass, and
+    both pair-join sides read the capped banded relation exchange-free."""
+    yield spark.sql(simhash_sig_sql("spark", rel="__dedup_docs", bits=bits))
+    yield spark.sql(simhash_ok_sql("spark", "__simhash_sig", bits=bits))
 
 
 def simhash(spark, bits: int = 32, max_hamming: int = 2):
     """Staged Spark execution: signatures computed once over the fanned-out
     input (the CPU-heavy pass), cached, then the banded self-join runs
-    over the 12-byte-per-doc signature relation (via the staged capped
-    banded relation — see ``_staged_simhash_sig``)."""
-    _staged_simhash_sig(spark, bits)
-    return spark.sql(
-        simhash_body_sql(
-            "spark", "__simhash_sig", bits, max_hamming, ok_rel="__simhash_ok"
-        )
+    over the 12-byte-per-doc signature relation via the staged capped
+    banded relation."""
+    return staged(
+        spark,
+        "simhash_sig",
+        lambda sig, ok: spark.sql(simhash_body_sql("spark", sig, bits, max_hamming, ok_rel=ok)),
+        bits=bits,
     )
 
 
 def simhash_capped_bucket_stats(spark, bits: int = 32, max_bucket: int = SIMHASH_MAX_BUCKET):
-    """Observability for the hot-band cap (ADVICE r03): the (band, bkey,
-    bsz) buckets the cap EXCLUDES from the candidate join. The DuckDB
-    oracle runs the identical capped SQL, so the correctness gate is
-    blind to cap-induced recall loss by construction — this is the
-    measurement surface: ``df.count()`` is the number of capped buckets,
-    ``sum(bsz*(bsz-1)/2)`` bounds the per-band candidate pairs the cap
-    dropped (a pair is truly lost only if EVERY shared band is capped).
-    tests/test_skew_and_caps.py pins the fixture-corpus value."""
-    return capped_bucket_stats(
+    """Observability for the hot-band cap: the (band, bkey, bsz) buckets
+    the cap EXCLUDES from the candidate join. The DuckDB oracle runs the
+    identical capped SQL, so the correctness gate is blind to cap-induced
+    recall loss by construction — this is the measurement surface:
+    ``df.count()`` is the number of capped buckets, ``sum(bsz*(bsz-1)/2)``
+    bounds the per-band candidate pairs the cap dropped (a pair is truly
+    lost only if EVERY shared band is capped). tests/test_skew_and_caps.py
+    pins the fixture-corpus value."""
+    return staged(
         spark,
-        _staged_simhash_sig(spark, bits),
-        _simhash_band_keys(bits // 8, "spark"),
-        max_bucket,
+        "simhash_sig",
+        lambda sig, _ok: capped_bucket_stats(
+            spark, sig, _simhash_band_keys(bits // 8, "spark"), max_bucket
+        ),
+        bits=bits,
     )
 
 
@@ -683,9 +579,12 @@ def capped_bucket_report(rows, max_bucket: int) -> dict:
 def minhash_capped_bucket_stats(spark, max_bucket: int = MAX_BUCKET):
     """MinHash-LSH twin of :func:`simhash_capped_bucket_stats`: the
     (band, bkey) buckets whose size exceeds the hot-bucket cap."""
-    minhash_lsh(spark)  # ensure __minhash_sig is staged (memoized)
-    return capped_bucket_stats(
-        spark, "__minhash_sig", G.band_exprs("sig", "spark"), max_bucket
+    return staged(
+        spark,
+        "minhash_sig",
+        lambda sig, _ok: capped_bucket_stats(
+            spark, sig, G.band_exprs("sig", "spark"), max_bucket
+        ),
     )
 
 
@@ -779,7 +678,7 @@ def ngram_jaccard(spark, n: int = 5, threshold: float = 0.7):
     from torchfusion_spark.session import staged_cache
 
     g = staged_cache(
-        spark, "ngram_blocks", spark.sql(ngram_blocks_sql("spark", rel=_staged_docs(spark), n=n))
+        spark, "ngram_blocks", spark.sql(ngram_blocks_sql("spark", rel=staged(spark, "docs"), n=n))
     )
     g.count()
     g.createOrReplaceTempView("__ngram_blocks")
@@ -1003,34 +902,31 @@ def connected_components(pairs, max_iter: int = 25):
 
 def minhash_clusters(spark, threshold: float = 0.6):
     """MinHash-LSH pairs → duplicate clusters (the canonical corpus-dedup
-    output: keep one doc per component). Memoized per (session, loaded
-    tables, threshold) like the signature relation: the canonical-
-    selection pipeline runs right after the clusters query in gate order
-    and would otherwise repeat the whole iterative CC loop."""
-    from torchfusion_spark.session import memo_lock, release_staged_group, staged_cache
+    output: keep one doc per component). Staged per (corpus, threshold)
+    like the signature relation: the canonical-selection pipeline runs
+    right after the clusters query in gate order and would otherwise
+    repeat the whole iterative CC loop."""
+    return staged(spark, "minhash_clusters", spark.table, threshold=threshold)
 
-    key = (_docs_key(spark), threshold)
-    with memo_lock(spark, "minhash_clusters"):
-        if getattr(spark, "_tf_clusters_key", object()) != key:
-            # ordered=False (r16): the pair relation's global ORDER BY is
-            # pure waste as CC input — a range-partition sort (plus the
-            # range partitioner's boundary-sampling pass, which re-executes
-            # the whole pair join once) feeding a loop that immediately
-            # re-shuffles the edges; the label output is identical.
-            cc = connected_components(minhash_lsh(spark, threshold, ordered=False))
-            labels = staged_cache(spark, "minhash_clusters", cc)
-            labels.count()
-            # the cached labels now hold the data — THIS call's CC edge/label
-            # checkpoint scratch is dead weight. Release only the nonce-scoped
-            # group (ADVICE r04): a bare "cc_" release would unpersist a
-            # concurrent connected_components call's live localCheckpoint
-            # blocks mid-loop, which lineage truncation makes unrecoverable.
-            nonce = getattr(cc, "_tf_cc_nonce", None)
-            if nonce is not None:
-                release_staged_group(spark, f"cc_{nonce}_")
-            labels.createOrReplaceTempView("__minhash_clusters")
-            spark._tf_clusters_key = key
-    return spark.table("__minhash_clusters")
+
+def clusters_rel(spark, threshold: float):
+    """Staged ``__minhash_clusters``. ordered=False: the pair relation's
+    global ORDER BY is pure waste as CC input — a range-partition sort
+    (plus the range partitioner's boundary-sampling pass, which
+    re-executes the whole pair join once) feeding a loop that
+    immediately re-shuffles the edges; the labels are identical."""
+    from torchfusion_spark.session import release_staged_group
+
+    cc = connected_components(minhash_lsh(spark, threshold, ordered=False))
+    yield cc
+    # the cached labels now hold the data — this call's CC edge/label
+    # checkpoint scratch is dead weight. Release only its nonce-scoped
+    # group: a bare "cc_" release would unpersist a concurrent
+    # connected_components call's live blocks mid-loop, which lineage
+    # truncation makes unrecoverable.
+    nonce = getattr(cc, "_tf_cc_nonce", None)
+    if nonce is not None:
+        release_staged_group(spark, f"cc_{nonce}_")
 
 
 def minhash_clusters_oracle_sql(d_unused: str = "duck", threshold: float = 0.6) -> str:
@@ -1179,19 +1075,23 @@ def containment(spark, threshold: float = CONTAIN_THRESHOLD, max_df: int = CONTA
     __contain_sh inside every timed query), so the steady-state query is
     in-row pair generation + one pair aggregate + the two
     pairs⋈sizes joins (pair side tiny → AQE broadcast)."""
-    _staged_containment(spark, max_df)
-    return spark.sql(
-        f"""
-        WITH sizes AS (SELECT doc_id, n FROM __contain_sizes),
-        shared AS (
-            SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS ins
-            FROM __contain_sh
-            LATERAL VIEW explode(docs) A AS id_a
-            LATERAL VIEW explode(docs) B AS id_b
-            WHERE id_a < id_b
-            GROUP BY id_a, id_b)
-        {containment_score_sql(threshold)}
-        """
+    return staged(
+        spark,
+        "containment",
+        lambda sh, sizes: spark.sql(
+            f"""
+            WITH sizes AS (SELECT doc_id, n FROM {sizes}),
+            shared AS (
+                SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS ins
+                FROM {sh}
+                LATERAL VIEW explode(docs) A AS id_a
+                LATERAL VIEW explode(docs) B AS id_b
+                WHERE id_a < id_b
+                GROUP BY id_a, id_b)
+            {containment_score_sql(threshold)}
+            """
+        ),
+        max_df=max_df,
     )
 
 
@@ -1214,47 +1114,28 @@ def containment_stop_body_sql(exploded_rel: str, max_df: int = CONTAIN_MAX_DF) -
     )
 
 
-def _staged_containment(spark, max_df: int = CONTAIN_MAX_DF) -> tuple[str, str]:
-    """Stage the containment inverted index once per (session, tables,
-    max_df): ``__contain_sh`` (h, docs≤max_df — localCheckpoint, see
-    ``containment``) and ``__contain_sizes`` (doc_id, n — cache; derived
-    from the SAME pruned exploded pass so the df-prune can never drift
-    between the index and the denominator)."""
-    from torchfusion_spark.session import memo_lock, staged_cache, staged_checkpoint
-
-    key = (_docs_key(spark), max_df)
-    with memo_lock(spark, "containment"):
-        if getattr(spark, "_tf_contain_key", object()) != key:
-            hx = _staged_hx(spark)
-            grouped = staged_checkpoint(
-                spark,
-                "contain_sh",
-                spark.sql(
-                    f"""
-                    WITH exploded AS ({containment_exploded_spark_sql(hx)}),
-                    stop AS ({containment_stop_body_sql("exploded", max_df)})
-                    SELECT e.h, collect_list(e.doc_id) AS docs
-                    FROM exploded e LEFT ANTI JOIN stop s ON e.h = s.h
-                    GROUP BY e.h
-                    """
-                ),
-            )
-            grouped.createOrReplaceTempView("__contain_sh")
-            sizes = staged_cache(
-                spark,
-                "contain_sizes",
-                spark.sql(
-                    """
-                    SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-                    FROM __contain_sh LATERAL VIEW explode(docs) AS doc_id
-                    GROUP BY doc_id
-                    """
-                ),
-            )
-            sizes.count()
-            sizes.createOrReplaceTempView("__contain_sizes")
-            spark._tf_contain_key = key
-    return "__contain_sh", "__contain_sizes"
+def containment_rels(spark, max_df: int):
+    """Staged containment inverted index, both localCheckpointed (see
+    ``containment``): ``__contain_sh`` (h, docs≤max_df) and
+    ``__contain_sizes`` (doc_id, n), derived from the SAME pruned
+    exploded pass so the df-prune can never drift between the index and
+    the denominator."""
+    yield spark.sql(
+        f"""
+        WITH exploded AS ({containment_exploded_spark_sql("__tf_hx")}),
+        stop AS ({containment_stop_body_sql("exploded", max_df)})
+        SELECT e.h, collect_list(e.doc_id) AS docs
+        FROM exploded e LEFT ANTI JOIN stop s ON e.h = s.h
+        GROUP BY e.h
+        """
+    )
+    yield spark.sql(
+        """
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+        FROM __contain_sh LATERAL VIEW explode(docs) AS doc_id
+        GROUP BY doc_id
+        """
+    )
 
 
 # --- exact-substring dedup (suffix-grouping formulation) -------------------
@@ -1352,30 +1233,21 @@ def substring_sql(d: str, k: int = SUBSTRING_K) -> str:
     )
 
 
-def _staged_substring_grams(spark, k: int = SUBSTRING_K) -> str:
-    """Positional-gram relation staged once per (session, loaded tables):
-    the plan references it on both the aggregate and the join side, and
-    Catalyst inlines CTEs — without staging the tokenize+md5 pass runs
-    twice (same discipline as ``_staged_hx``; param-scoped on k)."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = (_docs_key(spark), k)
-    with memo_lock(spark, "subgrams"):
-        if getattr(spark, "_tf_subgram_key", object()) != key:
-            g = staged_cache(
-                spark,
-                "tf_subgrams",
-                spark.sql(substring_grams_sql("spark", k, rel=_staged_docs(spark))),
-            )
-            g.count()
-            g.createOrReplaceTempView("__tf_subgrams")
-            spark._tf_subgram_key = key
-    return "__tf_subgrams"
+def subgrams_rel(spark, k: int):
+    """Staged positional-gram relation: the plan references it on both the
+    aggregate and the join side, and Catalyst inlines CTEs — unstaged,
+    the tokenize+md5 pass runs twice."""
+    return spark.sql(substring_grams_sql("spark", k, rel="__dedup_docs"))
 
 
 def dedup_substring(spark, k: int = SUBSTRING_K):
     """Spark path: staged positional grams, then the shared body SQL."""
-    return spark.sql(substring_body_sql("spark", _staged_substring_grams(spark, k), k))
+    return staged(
+        spark,
+        "substring_grams",
+        lambda grams: spark.sql(substring_body_sql("spark", grams, k)),
+        k=k,
+    )
 
 
 def strip_dup_spans_body_sql(
@@ -1504,11 +1376,17 @@ def strip_dup_spans(spark, k: int = SUBSTRING_K):
     """Spark path: staged positional grams, then the shared body SQL; the
     token scan reads the staged fanned-out docs view — the per-token
     explode is CPU-bound and a single parquet split would pin it to one
-    core (code-review r07)."""
-    return spark.sql(
-        strip_dup_spans_body_sql(
-            "spark", _staged_substring_grams(spark, k), k, docs_rel=_staged_docs(spark)
-        )
+    core. Grams and docs are bound together, so both describe one
+    corpus."""
+    from torchfusion_spark.session import bind
+
+    return bind(
+        spark,
+        ("substring_grams", "docs"),
+        lambda grams, docs: spark.sql(
+            strip_dup_spans_body_sql("spark", grams, k, docs_rel=docs)
+        ),
+        k=k,
     )
 
 
@@ -1650,54 +1528,27 @@ def strip_boilerplate_lines_sql(
     )
 
 
-def _staged_lines(spark, w: int = LINE_W, then=None):
-    """The (doc_id, line_no, line, hx) relation staged once per (session,
-    docs-view identity, w): the plan references it on both the rollup
-    and the anti-join probe side and Catalyst inlines CTEs — without
-    staging the tokenize+md5 lining pass runs twice (the
-    ``_staged_substring_grams`` discipline).
-
-    ``then`` is invoked INSIDE the memo lock (the ``_staged_hx``
-    discipline): a consumer resolving its plan from ``__tf_lines`` after
-    release races a concurrent docs-view swap, binding the hot set to
-    one corpus and the base CTE to the other (ADVICE r08 TOCTOU class;
-    code-review r14 caught this staging helper shipping without it)."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = _docs_key(spark)
-    # view/slot/memo-attr are all w-scoped (the semantic_dedup
-    # parameter-scoped-names discipline): two widths alternating in one
-    # session must not unpersist each other's staged relation mid-collect
-    # (code-review r14)
-    view = f"__tf_lines_{w}"
-    with memo_lock(spark, "lines"):
-        if getattr(spark, f"_tf_lines_key_{w}", object()) != key:
-            g = staged_cache(
-                spark,
-                f"tf_lines_{w}",
-                spark.sql(lines_rel_sql("spark", w, docs_rel=_staged_docs(spark))),
-            )
-            g.count()
-            g.createOrReplaceTempView(view)
-            setattr(spark, f"_tf_lines_key_{w}", key)
-        if then is not None:
-            return then(view)
-    return view
+def lines_rel(spark, w: int):
+    """Staged (doc_id, line_no, line, hx) relation, per lining width:
+    the plan references it on both the rollup and the anti-join probe
+    side and Catalyst inlines CTEs — unstaged, the tokenize+md5 lining
+    pass runs twice. The width scopes the view and slot, so two widths
+    alternating in one session never unpersist each other's relation
+    mid-collect."""
+    return spark.sql(lines_rel_sql("spark", w, docs_rel="__dedup_docs"))
 
 
 def strip_boilerplate_lines(
     spark, threshold: int = LINE_DUP_THRESHOLD, w: int = LINE_W
 ):
-    """Spark path: staged line stream, then the shared body SQL (resolved
-    inside the memo lock — see ``_staged_lines``); the per-doc n_lines
-    pass reads the raw table (light arithmetic — the scan-split
-    discipline of ``_strip_tail_sql``)."""
-    return _staged_lines(
+    """Spark path: staged line stream, then the shared body SQL, resolved
+    inside the memo lock; the per-doc n_lines pass reads the raw table
+    (light arithmetic — the scan-split discipline of ``_strip_tail_sql``)."""
+    return staged(
         spark,
-        w,
-        then=lambda rel: spark.sql(
-            strip_boilerplate_lines_body_sql("spark", rel, threshold, w=w)
-        ),
+        "lines",
+        lambda rel: spark.sql(strip_boilerplate_lines_body_sql("spark", rel, threshold, w=w)),
+        w=w,
     )
 
 
@@ -2016,7 +1867,7 @@ def url_incremental_query(spark):
     from torchfusion_spark.session import memo_lock
 
     with memo_lock(spark, "url_index"):
-        key = _docs_key(spark)
+        key = view_key(spark, "documents")
         row = spark.sql(f"SELECT {_url_split_subq('spark')} AS s").first()
         split = "NULL" if row is None or row.s is None else str(row.s)
         idx_pred = "FALSE" if split == "NULL" else f"doc_id < {split}"
@@ -2074,7 +1925,7 @@ def _url_index_path(key) -> str:
     """Index parquet dir for a docs-view key — shared by the builder and
     its tests so the path scheme cannot drift between them. Keyed by
     (md5 of the key's repr, pid): the pid isolates concurrent
-    processes, the tag isolates corpora within one. The ``_docs_key``
+    processes, the tag isolates corpora within one. The ``view_key``
     always-rebuild sentinel (a bare ``object()`` for un-analyzable
     views) gets a per-instance nonce path: its repr embeds a transient
     address that CPython can REUSE for a later sentinel, so two

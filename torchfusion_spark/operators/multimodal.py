@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from torchfusion_spark.session import staged
+
 FEATURE_SCHEMA = (
     "doc_id bigint, mime string, n_bytes bigint, first_byte int, last_byte int, checksum16 int"
 )
@@ -286,38 +288,15 @@ def perceptual_hash(df: DataFrame) -> DataFrame:
     return df.mapInPandas(op, schema="doc_id bigint, simhash bigint")
 
 
-def _staged_phash(spark: SparkSession, then=None):
-    """The payload-fingerprint relation staged once per (session, docs
-    view) — 12 bytes per doc; memoized like the text SimHash signature
-    so repeated dedup calls never re-run the Arrow scan. ``then`` (the
-    family-wide r9 binder discipline) runs INSIDE the memo lock with the
-    staged view name, so consumers resolve their final plan before a
-    concurrent docs-view swap can rebind ``__mm_phash`` (ADVICE r08
-    TOCTOU). The lock is NOT reentrant — never wrap this call in another
-    ``memo_lock("mm_phash")``."""
-    from torchfusion_spark.operators.dedup import _docs_key
-    from torchfusion_spark.session import memo_lock, staged_cache
+def phash_rels(spark: SparkSession):
+    """Staged payload fingerprints ``__mm_phash`` (12 bytes per doc, so
+    repeated dedup calls never re-run the Arrow scan) plus the capped
+    banded relation ``__mm_phash_ok``, which both pair-join sides read
+    exchange-free."""
+    from torchfusion_spark.operators.dedup import simhash_ok_sql
 
-    key = _docs_key(spark)
-    with memo_lock(spark, "mm_phash"):
-        if getattr(spark, "_tf_mm_phash_key", object()) != key:
-            from torchfusion_spark.operators.dedup import simhash_ok_sql
-
-            s = staged_cache(spark, "mm_phash", perceptual_hash(attach_payload(spark)))
-            s.count()
-            s.createOrReplaceTempView("__mm_phash")
-            # capped banded relation staged beside the fingerprints (r17,
-            # the __minhash_ok discipline): the pair self-join reads it on
-            # both sides exchange-free; explode + bucket window run once
-            ok = staged_cache(
-                spark,
-                "mm_phash_ok",
-                spark.sql(simhash_ok_sql("spark", "__mm_phash", bits=PHASH_BITS)),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__mm_phash_ok")
-            spark._tf_mm_phash_key = key
-        return then("__mm_phash") if then is not None else "__mm_phash"
+    yield perceptual_hash(attach_payload(spark))
+    yield spark.sql(simhash_ok_sql("spark", "__mm_phash", bits=PHASH_BITS))
 
 
 def dedup_query(spark: SparkSession, max_hamming: int = PHASH_MAX_HAMMING) -> DataFrame:
@@ -330,12 +309,11 @@ def dedup_query(spark: SparkSession, max_hamming: int = PHASH_MAX_HAMMING) -> Da
     <= 3 of the 4 bands, so every qualifying pair shares a band key."""
     from torchfusion_spark.operators.dedup import simhash_body_sql
 
-    return _staged_phash(
+    return staged(
         spark,
-        then=lambda rel: spark.sql(
-            simhash_body_sql(
-                "spark", rel, PHASH_BITS, max_hamming, ok_rel="__mm_phash_ok"
-            )
+        "phash",
+        lambda rel, ok: spark.sql(
+            simhash_body_sql("spark", rel, PHASH_BITS, max_hamming, ok_rel=ok)
         ),
     )
 
@@ -394,9 +372,10 @@ def phash_capped_bucket_stats(spark: SparkSession, max_bucket: int | None = None
     )
 
     cap = SIMHASH_MAX_BUCKET if max_bucket is None else max_bucket
-    return _staged_phash(
+    return staged(
         spark,
-        then=lambda rel: capped_bucket_stats(
+        "phash",
+        lambda rel, _ok: capped_bucket_stats(
             spark, rel, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap
         ),
     )
@@ -463,37 +442,18 @@ def frame_fingerprints(df: DataFrame) -> DataFrame:
     return df.mapInPandas(op, schema="doc_id bigint, frame_idx int, simhash bigint")
 
 
-def _staged_frame_phash(spark: SparkSession, then=None):
-    """Per-frame fingerprint relation staged once per (session, docs
-    view) — the ``_staged_phash`` discipline (memo-locked, ``then``
-    binds the consumer plan inside the lock)."""
-    from torchfusion_spark.operators.dedup import _docs_key
-    from torchfusion_spark.session import memo_lock, staged_cache
+def frame_phash_rels(spark: SparkSession):
+    """Staged per-frame fingerprints ``__mm_fphash`` plus the capped
+    banded relation ``__mm_fphash_ok`` over the PACKED frame key (the
+    tail's ``fsig`` spelling verbatim)."""
+    from torchfusion_spark.operators.dedup import simhash_ok_sql
 
-    key = _docs_key(spark)
-    with memo_lock(spark, "mm_fphash"):
-        if getattr(spark, "_tf_mm_fphash_key", object()) != key:
-            from torchfusion_spark.operators.dedup import simhash_ok_sql
-
-            s = staged_cache(spark, "mm_fphash", frame_fingerprints(attach_payload(spark)))
-            s.count()
-            s.createOrReplaceTempView("__mm_fphash")
-            # capped banded relation over the PACKED frame key (the tail's
-            # ``fsig`` spelling verbatim), staged beside the fingerprints
-            # (r17, the __minhash_ok discipline)
-            fsig = (
-                f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, "
-                f"simhash FROM __mm_fphash)"
-            )
-            ok = staged_cache(
-                spark,
-                "mm_fphash_ok",
-                spark.sql(simhash_ok_sql("spark", fsig, bits=PHASH_BITS)),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__mm_fphash_ok")
-            spark._tf_mm_fphash_key = key
-        return then("__mm_fphash") if then is not None else "__mm_fphash"
+    yield frame_fingerprints(attach_payload(spark))
+    fsig = (
+        f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, "
+        f"simhash FROM __mm_fphash)"
+    )
+    yield spark.sql(simhash_ok_sql("spark", fsig, bits=PHASH_BITS))
 
 
 def frame_dedup_tail_sql(
@@ -556,11 +516,10 @@ def frame_dedup_tail_sql(
 
 
 def frame_dedup_query(spark: SparkSession, max_hamming: int = FRAME_MAX_HAMMING) -> DataFrame:
-    return _staged_frame_phash(
+    return staged(
         spark,
-        then=lambda rel: spark.sql(
-            frame_dedup_tail_sql("spark", rel, max_hamming, ok_rel="__mm_fphash_ok")
-        ),
+        "frame_phash",
+        lambda rel, ok: spark.sql(frame_dedup_tail_sql("spark", rel, max_hamming, ok_rel=ok)),
     )
 
 
@@ -611,7 +570,7 @@ def frame_phash_capped_bucket_stats(spark: SparkSession, max_bucket: int | None 
 
     cap = SIMHASH_MAX_BUCKET if max_bucket is None else max_bucket
 
-    def _stats(rel):
+    def _stats(rel, _ok):
         fs = f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, simhash FROM {rel})"
         v = "__mm_fsig_stats"
         spark.sql(f"SELECT * FROM {fs}").createOrReplaceTempView(v)
@@ -619,4 +578,4 @@ def frame_phash_capped_bucket_stats(spark: SparkSession, max_bucket: int | None 
             spark, v, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap
         )
 
-    return _staged_frame_phash(spark, then=_stats)
+    return staged(spark, "frame_phash", _stats)

@@ -23,8 +23,8 @@ cannot broadcast a FULL OUTER side, so the join spelling drags a
 sort-merge exchange into every fusion; the union-aggregate shape is one
 tiny shuffle and generalizes to R rankers as an R-way union). Inputs
 are post-TopK relations — |Q|·k rows regardless of corpus size; the
-corpus-sized work happens once in the two staged builders
-(``textstats._staged_unigrams``, ``similarity._staged_norms``), both
+corpus-sized work happens once in the two staged relations
+(``unigrams`` and ``sim_norms``, see ``session.staged``), both
 shared with every other retrieval/scoring query in the session.
 
 Reference note: the reference engine (/root/reference, a DataFusion
@@ -36,8 +36,9 @@ from __future__ import annotations
 
 from torchfusion_spark.operators import sqlgen as G
 from torchfusion_spark.operators import textstats
-from torchfusion_spark.operators.similarity import _staged_norms, cosine_topk_sql
+from torchfusion_spark.operators.similarity import cosine_topk_sql
 from torchfusion_spark.operators.textstats import bm25_topk_sql
+from torchfusion_spark.session import bind
 
 RRF_K = 60  # the published default smoothing constant
 RRF_IN_K = 20  # per-ranker candidate-list depth fed into the fusion
@@ -100,21 +101,13 @@ def rrf_fusion_sql(
 
 def rrf_fusion(spark):
     """Staged Spark path: both corpus-sized inputs resolve from their
-    session memos, plans bound INSIDE both memo locks (the
-    ``_staged_norms`` TOCTOU discipline — a view swap between memo check
-    and ``spark.sql`` would bind one ranker to the other corpus). Lock
-    order is sim_norms → unigrams (→ docs inside the unigrams builder);
-    no existing path acquires these in the opposite order
-    (``memo_lock``'s acyclic-builder-order contract), so nesting cannot
-    deadlock."""
-    return _staged_norms(
+    session memos, bound together (``session.bind``): a view swap
+    between memo check and ``spark.sql`` would otherwise bind one ranker
+    to the other corpus."""
+    return bind(
         spark,
-        lambda nrel: textstats._staged_unigrams(
-            spark,
-            lambda trel: spark.sql(
-                rrf_fusion_sql("spark", tf_rel=trel, norm_rel=nrel)
-            ),
-        ),
+        ("sim_norms", "unigrams"),
+        lambda nrel, trel: spark.sql(rrf_fusion_sql("spark", tf_rel=trel, norm_rel=nrel)),
     )
 
 
@@ -195,14 +188,9 @@ def rag_context_sql(
 
 
 def rag_context(spark):
-    """Staged Spark path — same nested-memo discipline as
-    :func:`rrf_fusion` (sim_norms → unigrams lock order)."""
-    return _staged_norms(
+    """Staged Spark path — the same bound pair as :func:`rrf_fusion`."""
+    return bind(
         spark,
-        lambda nrel: textstats._staged_unigrams(
-            spark,
-            lambda trel: spark.sql(
-                rag_context_sql("spark", tf_rel=trel, norm_rel=nrel)
-            ),
-        ),
+        ("sim_norms", "unigrams"),
+        lambda nrel, trel: spark.sql(rag_context_sql("spark", tf_rel=trel, norm_rel=nrel)),
     )

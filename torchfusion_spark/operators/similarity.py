@@ -23,6 +23,7 @@ from __future__ import annotations
 import itertools
 
 from torchfusion_spark.operators import sqlgen as G
+from torchfusion_spark.session import bind, staged
 
 
 def _vec(d: str, col: str = "embedding") -> str:
@@ -62,47 +63,11 @@ def norm_cte(d: str, rel: str = "embeddings") -> str:
     )
 
 
-def _emb_key(spark):
-    """Identity of the live ``embeddings`` view for staged-memo keying —
-    the embeddings-side twin of ``dedup._docs_key`` (code-review r07): a
-    caller swapping the view directly must invalidate the norms memo, or
-    every similarity op silently joins against the previous corpus."""
-    try:
-        return (
-            getattr(spark, "_tf_tables_loaded", None),
-            spark.table("embeddings").semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 — unknown plan identity → always rebuild
-        return object()
-
-
-def _staged_norms(spark, then=None):
-    """Materialize norms once for Spark execution: the relation is used on
-    both sides of every similarity join, and the source parquet is a
-    single split — repartition for CPU parallelism, cache for reuse.
-    Memoized per (session, embeddings-view identity) — five registry
-    queries stage the identical relation back-to-back in gate order
-    (same pattern as the minhash signature memo).
-
-    ``then`` (callable taking the staged view name, returning a
-    DataFrame) is invoked INSIDE the memo lock: a consumer that resolves
-    its plan from ``__sim_norms`` after the lock is released races a
-    concurrent embeddings-view swap — the swap rebuilds the view between
-    the memo check and the consumer's ``spark.sql``, binding the plan to
-    the other corpus (ADVICE r08, the minhash TOCTOU twin)."""
-    from torchfusion_spark.session import cpu_fanout, memo_lock, staged_cache
-
-    key = _emb_key(spark)
-    with memo_lock(spark, "sim_norms"):
-        if getattr(spark, "_tf_sim_norms_key", object()) != key:
-            cpu_fanout(spark.table("embeddings")).createOrReplaceTempView("__sim_emb")
-            n = staged_cache(spark, "sim_norms", spark.sql(norm_cte("spark", "__sim_emb")))
-            n.count()  # materialize before multi-sided reuse
-            n.createOrReplaceTempView("__sim_norms")
-            spark._tf_sim_norms_key = key
-        if then is not None:
-            return then("__sim_norms")
-    return "__sim_norms"
+def norms_rel(spark):
+    """Staged ``__sim_norms``: the relation is used on both sides of every
+    similarity join; it reads the fanned-out ``__sim_emb`` because the
+    source parquet is a single split."""
+    return spark.sql(norm_cte("spark", "__sim_emb"))
 
 
 def cosine_topk_sql(
@@ -554,8 +519,8 @@ def semantic_dedup_sql(
 
 
 def cosine_topk(spark, k: int = 10, n_queries: int = 8):
-    return _staged_norms(
-        spark, lambda rel: spark.sql(cosine_topk_sql("spark", k, n_queries, rel=rel))
+    return staged(
+        spark, "sim_norms", lambda rel: spark.sql(cosine_topk_sql("spark", k, n_queries, rel=rel))
     )
 
 
@@ -668,168 +633,81 @@ def exact_pair_rows(spark, rel: str, threshold: float, max_n: int):
 
 
 def cosine_near_dup(spark, threshold: float = 0.42, max_n: int = EXACT_PAIRS_CAP):
-    return _staged_norms(
+    return staged(
         spark,
+        "sim_norms",
         lambda rel: exact_pair_rows(spark, rel, threshold, max_n).orderBy(
             "id_a", "id_b"
         ),
     )
 
 
-def _staged_assign(spark, rel: str, n_centroids: int = 16) -> str:
-    """Stage the nearest-centroid assignment relation (vec_id, v, nrm,
-    c_id) once per (session, embeddings identity, n_centroids) and return
-    its view name — shared by ``semantic_dedup``, the staged ``ivf_topk``
-    builder and the recall audit's IVF side (r16: each consumer used to
-    recompute the centroid argmax per call — one broadcast cross join +
-    a full-width exchange into the groupBy, ×3 consumers).
-
-    MUST be called inside the norms memo lock (every caller resolves via
-    ``_staged_norms``/``_staged_buckets``), so the memo check-act is
-    race-free and keyed like ``_staged_buckets``: a corpus swap
-    invalidates norms, buckets and assignments together.
-
-    The view/slot is scoped by ``n_centroids``: the staged similarity
-    views are content-deterministic per parameter set, so two concurrent
-    calls with the same parameters replace a view with identical content
-    (harmless), and calls with DIFFERENT parameters use different names —
-    without the scope, a concurrent 4-centroid call could swap the view
-    out from under a 16-centroid call mid-query (the ADVICE-r03
-    clobbering class; kmeans uses a nonce because its loop state is
-    content-nondeterministic mid-flight)."""
-    from torchfusion_spark.session import staged_cache
-
-    view = f"__sim_assign_{n_centroids}"
-    cur = spark._tf_sim_norms_key
-    memo = spark.__dict__.setdefault("_tf_sim_assign_keys", {})
-    if memo.get(n_centroids) != cur:
-        # release sibling-n slots staged on a SUPERSEDED corpus
-        # (code-review r16, second pass): staged_cache only unpersists
-        # on same-slot reuse, so a 4-centroid relation from corpus A
-        # would otherwise stay persisted for the whole session once the
-        # view swaps to corpus B and only 16 is ever requested again —
-        # the ADVICE-r03 unbounded-executor-storage class. Safe without
-        # the slot lock: every _staged_assign caller holds the norms
-        # memo lock, and nothing else touches sim_assign_* slots.
-        for n, k in list(memo.items()):
-            if n != n_centroids and k != cur:
-                stale = spark.__dict__.get("_tf_staged_pool", {}).pop(
-                    f"sim_assign_{n}", None
-                )
-                if stale is not None:
-                    try:
-                        stale.unpersist()
-                    except Exception:  # noqa: BLE001 — release is best-effort
-                        pass
-                # drop the stale temp view too (ADVICE r16): the slot
-                # release alone leaves __sim_assign_{n} resolvable, and a
-                # direct spark.table()/SQL reference after a corpus swap
-                # would silently recompute OLD-corpus rows
-                try:
-                    spark.catalog.dropTempView(f"__sim_assign_{n}")
-                except Exception:  # noqa: BLE001 — release is best-effort
-                    pass
-                del memo[n]
-        a = staged_cache(
-            spark,
-            f"sim_assign_{n_centroids}",
-            spark.sql(assign_cte_sql("spark", n_centroids, rel=rel)),
-        )
-        a.count()
-        a.createOrReplaceTempView(view)
-        memo[n_centroids] = cur
-    return view
+def assign_rel(spark, n_centroids: int):
+    """Staged nearest-centroid assignment relation (vec_id, v, nrm, c_id)
+    per centroid count — shared by ``semantic_dedup``, ``ivf_topk`` and
+    the recall audit's IVF side, which each used to recompute the
+    centroid argmax per call (one broadcast cross join + a full-width
+    exchange into the groupBy). The view and slot are scoped by
+    ``n_centroids``, so calls with different counts never swap a view
+    out from under each other mid-query."""
+    return spark.sql(assign_cte_sql("spark", n_centroids, rel="__sim_norms"))
 
 
 def ivf_topk(spark, k: int = 10, n_queries: int = 4, n_centroids: int = 16):
     # n_centroids threads through BOTH the staged assign and the probe
-    # SQL (code-review r16): a staged view built for a different centroid
-    # count than the probe ranks would silently drop the extra lists'
-    # candidates — one value must control both.
-    return _staged_norms(
+    # SQL: a staged view built for a different centroid count than the
+    # probe ranks would silently drop the extra lists' candidates — one
+    # value must control both.
+    return bind(
         spark,
-        lambda rel: spark.sql(
+        ("sim_norms", "sim_assign"),
+        lambda rel, assign: spark.sql(
             ivf_topk_sql(
-                "spark",
-                k,
-                n_queries,
-                n_centroids=n_centroids,
-                rel=rel,
-                assign_rel=_staged_assign(spark, rel, n_centroids),
+                "spark", k, n_queries, n_centroids=n_centroids, rel=rel, assign_rel=assign
             )
         ),
+        n_centroids=n_centroids,
     )
 
 
 def semantic_dedup(spark, threshold: float = 0.42, n_centroids: int = 16):
     """Staged Spark path: the assignment relation is referenced three
-    times (both pair sides + the verdict scan) — materialize it once
-    (and memoize it: see :func:`_staged_assign`)."""
+    times (both pair sides + the verdict scan) — read it staged."""
+    return staged(
+        spark,
+        "sim_assign",
+        lambda assign: spark.sql(semantic_dedup_sql("spark", threshold, assign_rel=assign)),
+        n_centroids=n_centroids,
+    )
 
-    def build(rel):
-        view = _staged_assign(spark, rel, n_centroids)
-        return spark.sql(semantic_dedup_sql("spark", threshold, assign_rel=view))
 
-    return _staged_norms(spark, build)
-
-
-def _staged_buckets(spark, then):
-    """Stage the sign-LSH bucketed relation
-    (vec_id, v, nrm, bucket, mb0..mb{bands-1}) once per (session,
-    embeddings identity) and resolve ``then`` against it inside the norms
-    memo lock — shared by the pair-enumerating LSH query (the fine
-    multi-band mb* keys), the cluster-collapse query (the coarse band-0
-    ``bucket``) and the recall audit, which run back-to-back in gate
-    order and would otherwise recompute the 64+8 plane dots repeatedly.
-    Memoized under the norms key: the norms lock is already held here, so
-    the check-act is race-free, and a corpus swap invalidates both
-    relations together."""
-    from torchfusion_spark.session import staged_cache
-
-    def build(rel):
-        key = spark._tf_sim_norms_key
-        if getattr(spark, "_tf_sim_buckets_key", object()) != key:
-            mb_cols = ", ".join(
-                f"{e} AS {c}"
-                for c, e in zip(MB_COLS, lsh_band_bucket_exprs("v", "spark"))
-            )
-            b = staged_cache(
-                spark,
-                "sim_buckets",
-                spark.sql(
-                    f"SELECT vec_id, v, nrm, {lsh_bucket_expr('v', 'spark')} AS bucket, "
-                    f"{mb_cols} FROM {rel}"
-                ),
-            )
-            b.count()
-            b.createOrReplaceTempView("__sim_buckets")
-            # capped banded relation staged beside the buckets (r17, the
-            # __minhash_ok discipline): the pair self-join reads it on
-            # both sides exchange-free, and the 64-double vector payload
-            # crosses the (band, bkey) exchange once per corpus instead
-            # of twice per query
-            exploded = G.band_explode(
-                "__sim_buckets", MB_COLS, "spark", carry="vec_id, v, nrm"
-            )
-            ok = staged_cache(
-                spark,
-                "sim_lsh_ok",
-                spark.sql(
-                    f"""
-                    SELECT vec_id, v, nrm, band, bkey FROM (
-                        SELECT vec_id, v, nrm, band, bkey,
-                               COUNT(*) OVER (PARTITION BY band, bkey) AS bsz
-                        FROM ({exploded}))
-                    WHERE bsz <= {LSH_MAX_BUCKET}
-                    """
-                ),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__sim_lsh_ok")
-            spark._tf_sim_buckets_key = key
-        return then("__sim_buckets")
-
-    return _staged_norms(spark, build)
+def buckets_rels(spark):
+    """Staged sign-LSH bucketed relation (vec_id, v, nrm, bucket,
+    mb0..mb{bands-1}) plus its capped banded relation ``__sim_lsh_ok`` —
+    shared by the pair-enumerating LSH query (the fine multi-band mb*
+    keys), the cluster-collapse query (the coarse band-0 ``bucket``) and
+    the recall audit, which would otherwise recompute the 64+8 plane
+    dots repeatedly. The pair self-join reads the capped relation on
+    both sides exchange-free, so the 64-double vector payload crosses
+    the (band, bkey) exchange once per corpus instead of twice per
+    query."""
+    mb_cols = ", ".join(
+        f"{e} AS {c}" for c, e in zip(MB_COLS, lsh_band_bucket_exprs("v", "spark"))
+    )
+    yield spark.sql(
+        f"SELECT vec_id, v, nrm, {lsh_bucket_expr('v', 'spark')} AS bucket, "
+        f"{mb_cols} FROM __sim_norms"
+    )
+    exploded = G.band_explode("__sim_buckets", MB_COLS, "spark", carry="vec_id, v, nrm")
+    yield spark.sql(
+        f"""
+        SELECT vec_id, v, nrm, band, bkey FROM (
+            SELECT vec_id, v, nrm, band, bkey,
+                   COUNT(*) OVER (PARTITION BY band, bkey) AS bsz
+            FROM ({exploded}))
+        WHERE bsz <= {LSH_MAX_BUCKET}
+        """
+    )
 
 
 def cosine_near_dup_lsh(
@@ -838,12 +716,13 @@ def cosine_near_dup_lsh(
     # the staged ok relation bakes in the default cap — a caller probing
     # a different cap (the skew report's uncapped growth witness) takes
     # the inline spelling
-    ok = "__sim_lsh_ok" if max_bucket == LSH_MAX_BUCKET else None
-    return _staged_buckets(
+    return staged(
         spark,
-        lambda rel: spark.sql(
+        "sim_buckets",
+        lambda rel, ok: spark.sql(
             cosine_near_dup_lsh_sql(
-                "spark", threshold, rel=rel, max_bucket=max_bucket, ok_rel=ok
+                "spark", threshold, rel=rel, max_bucket=max_bucket,
+                ok_rel=ok if max_bucket == LSH_MAX_BUCKET else None,
             )
         ),
     )
@@ -858,18 +737,18 @@ def lsh_capped_bucket_stats(spark, max_bucket: int = LSH_MAX_BUCKET):
     from the other families."""
     from torchfusion_spark.operators.dedup import capped_bucket_stats
 
-    return _staged_buckets(
+    return staged(
         spark,
-        lambda rel: capped_bucket_stats(
-            spark, rel, MB_COLS, max_bucket, carry="vec_id"
-        ),
+        "sim_buckets",
+        lambda rel, _ok: capped_bucket_stats(spark, rel, MB_COLS, max_bucket, carry="vec_id"),
     )
 
 
 def near_dup_collapse(spark, threshold: float = 0.30):
-    return _staged_buckets(
+    return staged(
         spark,
-        lambda rel: spark.sql(near_dup_collapse_sql("spark", threshold, rel=rel)),
+        "sim_buckets",
+        lambda rel, _ok: spark.sql(near_dup_collapse_sql("spark", threshold, rel=rel)),
     )
 
 
@@ -1033,19 +912,18 @@ def ann_recall_audit(
     max_bucket: int = LSH_MAX_BUCKET,
     n_centroids: int = 16,
 ):
-    """Staged Spark path: norms AND the LSH bucket relation resolve from
-    the session memos (both referenced by multiple components), inside
-    the norms lock like every other similarity consumer. The exact pair
-    side is the Arrow scan (:func:`exact_pair_rows`), registered as a
-    per-call temp view the audit SQL splices in — per-call because the
-    scan is part of the audited computation (no caching across calls),
-    nonce-named so concurrent audits cannot clobber each other's view."""
+    """Staged Spark path: norms, the LSH bucket relations and the IVF
+    assignment resolve from the session memos (each referenced by
+    several components), bound together so all describe one corpus. The
+    exact pair side is the Arrow scan (:func:`exact_pair_rows`),
+    registered as a per-call temp view the audit SQL splices in —
+    per-call because the scan is part of the audited computation (no
+    caching across calls), nonce-named so concurrent audits cannot
+    clobber each other's view."""
 
-    def build(rel):
+    def build(norms, buckets, ok, assign):
         view = f"__audit_ep_{next(_audit_ep_nonce)}"
-        exact_pair_rows(
-            spark, "__sim_norms", threshold, AUDIT_PAIR_SAMPLE
-        ).createOrReplaceTempView(view)
+        exact_pair_rows(spark, norms, threshold, AUDIT_PAIR_SAMPLE).createOrReplaceTempView(view)
         return spark.sql(
             ann_recall_audit_sql(
                 "spark",
@@ -1053,27 +931,25 @@ def ann_recall_audit(
                 n_queries,
                 threshold,
                 max_bucket,
-                rel="__sim_norms",
-                bucket_rel=rel,
+                rel=norms,
+                bucket_rel=buckets,
                 exact_rel=view,
-                # the IVF side reads the session-staged assignment like
-                # it already reads the staged norms/buckets (r16): the
-                # staged view is content-identical to the inline CTE;
-                # the audited computation — probe, candidate join,
+                # the staged views are content-identical to the inline
+                # CTEs; the audited computation — probe, candidate join,
                 # top-k, hit joins, and the per-call exact side — still
                 # runs fresh every call. ONE n_centroids value controls
-                # the staged view and the probe SQL (code-review r16).
-                assign_rel=_staged_assign(spark, "__sim_norms", n_centroids),
+                # the staged view and the probe SQL.
+                assign_rel=assign,
                 n_centroids=n_centroids,
-                # the LSH pair side reads the staged capped band relation
-                # (r17) when the audit runs at the registered cap — the
-                # audited pair SET is identical (the staged relation is
-                # row-identical to the inline sized/ok chain)
-                ok_rel="__sim_lsh_ok" if max_bucket == LSH_MAX_BUCKET else None,
+                # the staged capped band relation only at the registered
+                # cap — the audited pair SET is identical there
+                ok_rel=ok if max_bucket == LSH_MAX_BUCKET else None,
             )
         )
 
-    return _staged_buckets(spark, build)
+    return bind(
+        spark, ("sim_norms", "sim_buckets", "sim_assign"), build, n_centroids=n_centroids
+    )
 
 
 _audit_ep_nonce = itertools.count()
@@ -1110,7 +986,7 @@ def norm_excluded_stats(spark):
             f"(SELECT COUNT(*) AS kept FROM {rel}) k"
         )
 
-    return _staged_norms(spark, build)
+    return staged(spark, "sim_norms", build)
 
 
 def quantize_int8_sql(d: str) -> str:
@@ -1296,7 +1172,7 @@ def kmeans(spark, k: int = KMEANS_K, iters: int = KMEANS_ITERS):
             spark, f"km_pts_{nonce}", spark.sql(f"SELECT vec_id, v FROM {rel}")
         )
 
-    _staged_norms(spark, snapshot).createOrReplaceTempView(v_pts)
+    staged(spark, "sim_norms", snapshot).createOrReplaceTempView(v_pts)
     pts = f"(SELECT vec_id, v FROM {v_pts})"
     staged_checkpoint(
         spark,
@@ -1333,8 +1209,8 @@ def build_ivf_index(spark, path: str, n_centroids: int = 16) -> None:
     inverted-list id. Build once, probe many — at 100 TB the probe phase
     reads only ``n_probe / n_centroids`` of the index because the list
     id is a partition directory, not a row filter."""
-    a = _staged_norms(
-        spark, lambda rel: spark.sql(assign_cte_sql("spark", n_centroids, rel=rel))
+    a = staged(
+        spark, "sim_norms", lambda rel: spark.sql(assign_cte_sql("spark", n_centroids, rel=rel))
     )
     a.write.mode("overwrite").partitionBy("c_id").parquet(path)
 

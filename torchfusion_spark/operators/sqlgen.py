@@ -112,10 +112,6 @@ def afilter(arr: str, lam: str, d: str) -> str:
     return f"{fn}({arr}, {lam})"
 
 
-def arr_min(arr: str, d: str) -> str:
-    return f"array_min({arr})" if d == "spark" else f"list_aggregate({arr}, 'min')"
-
-
 def arr_distinct(arr: str, d: str) -> str:
     fn = "array_distinct" if d == "spark" else "list_distinct"
     return f"{fn}({arr})"
@@ -142,12 +138,6 @@ def arr_intersect_size(a: str, b: str, d: str) -> str:
     if d == "spark":
         return f"size(array_intersect({a}, {b}))"
     return f"len(list_intersect({a}, {b}))"
-
-
-def arr_union_size(a: str, b: str, d: str) -> str:
-    if d == "spark":
-        return f"size(array_distinct(concat({a}, {b})))"
-    return f"len(list_distinct(list_concat({a}, {b})))"
 
 
 def null_eq(a: str, b: str, d: str) -> str:

@@ -18,6 +18,7 @@ from torchfusion_spark.operators import (
     textstats,
 )
 from torchfusion_spark.plans.registry import query
+from torchfusion_spark.session import bind, staged
 
 
 def _sql_pair(name: str, gen, doc: str) -> None:
@@ -803,7 +804,7 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _run(t_rel: str) -> DataFrame:
         return spark.sql(textstats.pack_sequences_sql("spark", t_rel=t_rel))
 
-    return textstats._staged_pack_t(spark, then=_run)
+    return staged(spark, "pack_t", _run)
 
 @query(
     "text_dup_gram_fraction",
@@ -815,21 +816,13 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "back, one per-doc rollup — no all-pairs",
 )
 def text_dup_gram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from torchfusion_spark.session import staged_cache
-
-    # staged with the repo's memo + release discipline (slot-tracked
-    # unpersist on sf_dir switch), not a bare .cache() that re-ran the
-    # dominant explode+hash pass on every invocation; keyed on the
-    # docs-view identity so a direct view swap rebuilds (code-review r07)
-    key = dedup._docs_key(spark)
-    if getattr(spark, "_tf_dupgram_key", object()) != key:
-        e = staged_cache(
-            spark, "dupgram_e", spark.sql(textstats.dup_gram_exploded_sql("spark"))
-        )
-        e.count()
-        e.createOrReplaceTempView("__dupgram_e")
-        spark._tf_dupgram_key = key
-    return spark.sql(textstats.dup_gram_fraction_sql("spark", e_rel="__dupgram_e"))
+    # staged, not a bare .cache() that re-ran the dominant explode+hash
+    # pass on every invocation
+    return staged(
+        spark,
+        "dupgram",
+        lambda e: spark.sql(textstats.dup_gram_fraction_sql("spark", e_rel=e)),
+    )
 
 @query(
     "text_bm25_topk",
@@ -843,11 +836,10 @@ def text_dup_gram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a ranking",
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # plan resolved INSIDE the memo lock (ADVICE r08 TOCTOU class): a
-    # docs-view swap between staging and spark.sql would bind the plan
-    # to the other corpus
-    return textstats._staged_unigrams(
-        spark, then=lambda tfn: spark.sql(textstats.bm25_topk_sql("spark", tf_rel=tfn))
+    # plan resolved INSIDE the memo lock: a docs-view swap between
+    # staging and spark.sql would bind the plan to the other corpus
+    return staged(
+        spark, "unigrams", lambda tfn: spark.sql(textstats.bm25_topk_sql("spark", tf_rel=tfn))
     )
 
 
@@ -903,7 +895,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return spark.sql(textstats.lm_bucket_sql("spark", v))
 
-    return textstats._staged_unigrams(spark, then=_build)
+    return staged(spark, "unigrams", _build)
 
 
 @query(
@@ -920,7 +912,6 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # binds TWO staged views: resolved via the key-revalidated binder —
     # nested locks alone can't prove the two stagings saw one corpus
-    # (code-review r09; the ADVICE r08 TOCTOU class)
     def _build(tfn, labn):
         # checkpoint the per-doc score relation so the quintile tail's
         # cuts aggregate + final select read it once (VERDICT r9 item 1)
@@ -935,7 +926,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return spark.sql(textstats.quality_classifier_bucket_sql("spark", v))
 
-    return textstats.bind_tf_and_labels(spark, _build)
+    return bind(spark, ("unigrams", "cls_labels"), _build)
 
 
 @query(
@@ -968,7 +959,7 @@ def pipeline_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return spark.sql(textstats.quality_ensemble_bucket_sql("spark", cv, pv))
 
-    return textstats.bind_tf_and_labels(spark, _build)
+    return bind(spark, ("unigrams", "cls_labels"), _build)
 
 
 @query(
@@ -986,7 +977,7 @@ def pipeline_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # binds THREE staged views (tf + labels + shingles) via the
-    # key-revalidated triple binder; the two scored relations and the
+    # key-revalidated binder; the two scored relations and the
     # survivor set are checkpointed (and memo-shared with the
     # classifier/perplexity/ensemble queries) so each corpus-scale
     # relation computes once per session
@@ -1016,7 +1007,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return spark.sql(textstats.pretrain_tail_sql("spark", kv))
 
-    return textstats.bind_tf_labels_hx(spark, _build)
+    return bind(spark, ("unigrams", "cls_labels", "hx"), _build)
 
 
 @query(
@@ -1042,7 +1033,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return spark.sql(textstats.dsir_bucket_sql("spark", v))
 
-    return textstats._staged_unigrams(spark, then=_build)
+    return staged(spark, "unigrams", _build)
 
 
 _sql_pair(
@@ -1187,10 +1178,9 @@ _sql_pair(
     "side reads the per-session staged shingle relation",
 )
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # plan resolved INSIDE the memo lock (ADVICE r08 TOCTOU class)
-    return dedup._staged_hx(
-        spark,
-        then=lambda hxn: spark.sql(textstats.decontaminate_sql("spark", sh_rel=hxn)),
+    # plan resolved INSIDE the memo lock
+    return staged(
+        spark, "hx", lambda hxn: spark.sql(textstats.decontaminate_sql("spark", sh_rel=hxn))
     )
 
 
@@ -1206,11 +1196,10 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "staged shingle relation",
 )
 def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # binds THREE staged views — the key-revalidated bloom → hx binder
-    # (the nesting order _staged_bloom itself acquires on a rebuild;
-    # hx → bloom would deadlock against a concurrent bloom build)
-    return textstats.bind_hx_and_bloom(
+    # binds THREE staged views with the key-revalidated binder
+    return bind(
         spark,
+        ("hx", "bloom"),
         lambda hxn, bench_rel, bloom_rel: spark.sql(
             textstats.decontaminate_bloom_sql(
                 "spark",

@@ -1,172 +1,79 @@
-"""Session-staged relation prewarm — the ONE copy of the staging
-schedule shared by ``bench.py`` and ``tools/perf_probe.py`` (code-review
-r16: the two hand-duplicated lists had to be patched in lock-step for
-the pool-width change and again for the staged-assign root; one helper
-ends the drift).
+"""Session-staged relation prewarm — the ONE copy of the staging schedule
+shared by ``bench.py``, ``tools/perf_probe.py`` and the repo benchmark.
 
-The bench's r03/r06 contract: every session-staged relation the
-headline set reads is built here, OUTSIDE the timed region, so its
-one-time cost lands in ``staging_warm_sec`` instead of polluting the
-first timed query's cold number. Builders are independent Spark jobs
-apart from the shared hashed-shingle relation (``__tf_hx`` feeds
-minhash/containment/bloom), so phase 1 overlaps the roots and phase 2
-overlaps the three hx consumers. Safe concurrently: each builder runs
-exactly once per memo key and writes a distinct staged_cache slot /
-memo attribute, so no two threads race on a slot.
-
-Pool width (r16, guide §2.6): a few jobs in flight fill the scheduler's
-tail without fighting for task slots. The r07 width-10 pool (one thread
-per root) measured 5–6 s at sf0.1 on a quiet host, but local-mode task
-dispatch pays a futex-wake chain per task, and on hosts with inflated
-thread-wake latency (32–500 µs measured in r16) ten concurrent jobs
-thrash: interleaved fresh-session A/B at sf0.1 measured width 10 at
-{20, 79, 80, 133} s against width 5 at {28.0, 28.2, 35.4} s and width 3
-at ~42 s — width 5 keeps the overlap win with far lower variance.
-Parameterized (``$SPARK_GRAFT_STAGING_POOL``) for the same reason the
-core count is: a real cluster sizes concurrent staging submissions to
-its scheduler, not to one sandbox's wake latency. Invalid or
-non-positive values fall back to the default instead of aborting the
-prewarm (an aborted prewarm silently shifts every staged build into the
-first timed queries — code-review r16).
+Every session-staged relation the headline set reads is built here,
+outside any timed query, so its one-time cost lands in the staging
+figure instead of polluting the first timed query's cold number. The
+schedule is a table: each component is submitted as soon as the
+components it names have finished, so independent builds overlap and a
+dependent never parks a pool thread on its dep's memo lock (which would
+also charge the dep's build to the dependent's itemized wall-clock).
+Safe concurrently: each staged relation builds once per memo key under
+its own lock (``session.staged``).
 """
 
 from __future__ import annotations
 
-import os
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from functools import partial
 
-_DEFAULT_POOL_WIDTH = 5
+# A few jobs in flight fill the scheduler's tail without fighting for
+# task slots: fresh-session A/B at sf0.1 measured width 10 at
+# {20, 79, 80, 133} s, width 5 at {28.0, 28.2, 35.4} s and width 3 at ~42 s.
+POOL_WIDTH = 5
+
+# (timing name, staged entry or builder, components that must finish first).
+# Deps mirror the staged table; li_by_order and url_index keep their own
+# on-disk lifecycles and join only by calling their builders.
+# sim_buckets waits for sim_assign: both read the norms relation, and the
+# serial chain keeps each row's wall-clock the build it names.
+COMPONENTS = (
+    ("hx_shingles", "hx", ()),
+    ("sim_norms", "sim_norms", ()),
+    ("substring_grams", "substring_grams", ()),
+    ("unigrams", "unigrams", ()),
+    ("payload_phash", "phash", ()),
+    ("frame_phash", "frame_phash", ()),
+    ("doc_lines", "lines", ()),
+    ("pack_tokens", "pack_t", ()),
+    ("li_by_order", "li_by_order", ()),
+    ("url_index", "url_index", ()),
+    ("minhash_clusters", "minhash_clusters", ("hx_shingles",)),
+    ("bloom_filter", "bloom", ("hx_shingles",)),
+    ("containment_index", "containment", ("hx_shingles",)),
+    ("quality_labels", "cls_labels", ("unigrams",)),
+    ("sim_assign", "sim_assign", ("sim_norms",)),
+    ("sim_buckets", "sim_buckets", ("sim_assign",)),
+)
 
 
-def staging_pool_width() -> int:
-    """$SPARK_GRAFT_STAGING_POOL, validated: a positive int, else the
-    default 5 (non-int AND non-positive both fall back — a width-0
-    misconfig must not silently serialize the prewarm, which measured
-    ~100 s vs ~28 s at the default on the r16 host)."""
-    try:
-        width = int(os.environ.get("SPARK_GRAFT_STAGING_POOL", ""))
-    except ValueError:
-        return _DEFAULT_POOL_WIDTH
-    return width if width > 0 else _DEFAULT_POOL_WIDTH
+def _builder(target: str):
+    from torchfusion_spark.operators.dedup import url_incremental_query
+    from torchfusion_spark.plans.relational2 import _staged_li_by_order
+    from torchfusion_spark.session import staged
+
+    own = {"li_by_order": _staged_li_by_order, "url_index": url_incremental_query}
+    return own.get(target) or partial(staged, name=target)
 
 
-def prewarm_staging(spark, timed=None, width: int | None = None) -> None:
+def prewarm_staging(spark, timed=None) -> None:
     """Build every session-staged relation the headline set reads.
 
     ``timed``: optional ``f(name, fn, *args)`` wrapper — the bench passes
     one that records each component's wall-clock under the concurrent
-    schedule into its ``staging_components`` payload; default just calls
-    ``fn(*args)``.
+    schedule; default just calls ``fn(*args)``.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from torchfusion_spark.operators.dedup import (
-        _staged_containment,
-        _staged_hx,
-        _staged_lines,
-        _staged_substring_grams,
-        minhash_clusters,
-        url_incremental_query,
-    )
-    from torchfusion_spark.operators.multimodal import (
-        _staged_frame_phash,
-        _staged_phash,
-    )
-    from torchfusion_spark.operators.similarity import (
-        _staged_assign,
-        _staged_buckets,
-        _staged_norms,
-    )
-    from torchfusion_spark.operators.textstats import (
-        _staged_bloom,
-        _staged_labels,
-        _staged_pack_t,
-        _staged_unigrams,
-    )
-    from torchfusion_spark.plans.relational2 import _staged_li_by_order
-
-    def _assign16(s):
-        # the IVF/semantic-dedup/audit shared assignment (r16 change 10)
-        # resolves inside the norms lock like every similarity consumer;
-        # prewarming it keeps the r06 contract — its one-time build must
-        # land in staging_warm_sec, not in the first timed consumer's
-        # cold run (code-review r16)
-        return _staged_norms(s, lambda rel: _staged_assign(s, rel, 16))
-
-    def _buckets(s):
-        # the sign-LSH bucketed relation (vec_id, v, nrm, bucket, mb*) —
-        # shared by sim_cosine_near_dup_lsh, sim_near_dup_collapse and
-        # the recall audit; without this root its build billed 3 extra
-        # jobs and ~2s to the first consumer's cold run (r16 headline
-        # probe: 9 jobs run 1 vs 6 warm), the same r06-contract gap the
-        # assign had
-        return _staged_buckets(s, lambda rel: rel)
-
     run = timed if timed is not None else (lambda _name, fn, *a: fn(*a))
-    if width is None:
-        width = staging_pool_width()
-
-    with ThreadPoolExecutor(max_workers=width) as pool:
-        roots = [
-            # shared shingle+md5 relation — must land before its three
-            # phase-2 consumers below
-            pool.submit(run, "hx_shingles", _staged_hx, spark),
-            # __sim_norms (+ the multi-band LSH bucket columns ride the
-            # same memo chain on first use)
-            pool.submit(run, "sim_norms", _staged_norms, spark),
-            # positional grams
-            pool.submit(run, "substring_grams", _staged_substring_grams, spark),
-            # BM25/LM term freqs
-            pool.submit(run, "unigrams", _staged_unigrams, spark),
-            # payload aHash fingerprints (multimodal_dedup)
-            pool.submit(run, "payload_phash", _staged_phash, spark),
-            # per-frame aHash fingerprints (multimodal_frame_dedup)
-            pool.submit(run, "frame_phash", _staged_frame_phash, spark),
-            # ordered line stream (corpus_strip_boilerplate_lines)
-            pool.submit(run, "doc_lines", _staged_lines, spark),
-            # (lang, shard)-partitioned tokenized pack input
-            pool.submit(run, "pack_tokens", _staged_pack_t, spark),
-            # l_orderkey-bucketed per-(order,supp) rollup (q21;
-            # session-scoped — every run pays the build here, visibly)
-            pool.submit(run, "li_by_order", _staged_li_by_order, spark),
-            # one-time persisted URL seen-set (probe plan returned
-            # unexecuted; the build is the staged cost)
-            pool.submit(run, "url_index", url_incremental_query, spark),
-        ]
-        roots[0].result()  # hx must land before its three consumers
-        deps = [
-            # builds __minhash_sig, the LSH pair relation AND the
-            # memoized cluster labels (the CC checkpoint chain)
-            pool.submit(run, "minhash_clusters", minhash_clusters, spark),
-            # 64 KB benchmark filter
-            pool.submit(run, "bloom_filter", _staged_bloom, spark),
-            # inverted index
-            pool.submit(run, "containment_index", _staged_containment, spark),
-        ]
-        # the label relation now derives from the staged tf rows (r17:
-        # one corpus tokenization per session, not two), so it resolves
-        # through the unigrams memo lock — submitted beside the unigrams
-        # root it would park a pool slot on that lock and charge the
-        # whole tf build to quality_labels' itemized wall (the ADVICE
-        # r16 misattribution class); wait for unigrams, then submit
-        roots[3].result()
-        deps.append(pool.submit(run, "quality_labels", _staged_labels, spark))
-        # phase 2 for the assign too (code-review r16, second pass): it
-        # resolves through the norms memo lock, so submitting it beside
-        # the sim_norms root parks a pool slot on that lock for the
-        # whole norms build AND charges the wait to sim_assign's
-        # itemized wall-clock — wait for norms, then submit
-        roots[1].result()
-
-        def _sim_phase2(s):
-            # assign and buckets BOTH resolve through the norms memo
-            # lock, so submitted side by side one of them spends the
-            # other's whole build blocked on the lock and its itemized
-            # staging_components wall is misattributed (ADVICE r16).
-            # Chaining them on one pool slot keeps each row's number the
-            # build it names.
-            run("sim_assign", _assign16, s)
-            run("sim_buckets", _buckets, s)
-
-        deps.append(pool.submit(_sim_phase2, spark))
-        for fut in roots + deps:
-            fut.result()
+    waiting = {name: (_builder(target), set(deps)) for name, target, deps in COMPONENTS}
+    running = {}
+    with ThreadPoolExecutor(max_workers=POOL_WIDTH) as pool:
+        while waiting or running:
+            for name, (fn, deps) in list(waiting.items()):
+                if not deps & (waiting.keys() | set(running.values())):
+                    del waiting[name]
+                    running[pool.submit(run, name, fn, spark)] = name
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                del running[fut]
+                if fut.exception() is not None:
+                    raise fut.exception()
